@@ -1308,21 +1308,30 @@ object Similarity {
         else {
           val pool = java.util.concurrent.Executors.newFixedThreadPool(
             math.min(tables, 8))
-          implicit val packEc: scala.concurrent.ExecutionContext =
-            scala.concurrent.ExecutionContext.fromExecutorService(pool)
+          val packEc = scala.concurrent.ExecutionContext.fromExecutorService(pool)
+          // the packs run on the pool; their join runs on the completing
+          // thread, so a sibling finishing after a failure (and after
+          // the pool's shutdown) is not rejected by the pool
+          implicit val joinEc: scala.concurrent.ExecutionContext =
+            scala.concurrent.ExecutionContext.parasitic
           try scala.concurrent.Await.result(
             scala.concurrent.Future.sequence((0 until tables).map(t =>
-              scala.concurrent.Future(packOneTable(t)))),
+              scala.concurrent.Future(packOneTable(t))(packEc))),
             scala.concurrent.duration.Duration.Inf)
-          finally pool.shutdown()
+          finally {
+            // hand the per-table packs to the CALLER thread's transient
+            // registry (pack-pool threads die with the pool): the
+            // consumer's next drain destroys them (see
+            // trackTransientBroadcast). In a finally, so a throwing
+            // pack leaves no sibling's broadcast to the GC; the pool is
+            // joined first, so a sibling still packing when the first
+            // failure surfaced has queued its broadcast before the drain.
+            pool.shutdown()
+            pool.awaitTermination(Long.MaxValue, java.util.concurrent.TimeUnit.NANOSECONDS)
+            var b = packedBcs.poll()
+            while (b != null) { Dedup.trackTransientBroadcast(b); b = packedBcs.poll() }
+          }
         }
-      // hand the per-table packs to the CALLER thread's transient
-      // registry (pack-pool threads die with the pool): the consumer's
-      // next drain destroys them blocking (see trackTransientBroadcast)
-      locally {
-        var b = packedBcs.poll()
-        while (b != null) { Dedup.trackTransientBroadcast(b); b = packedBcs.poll() }
-      }
       heapTopK(perTable.reduce(_ unionByName _), k)
     } finally idx.unpersist(blocking = false)
   }

@@ -272,6 +272,8 @@ case class WinnowMins(child: Expression, k: Int, w: Int, distinct: Boolean)
 
 case class RepGramStats(child: Expression, n: Int)
     extends UnaryExpression with ExpectsInputTypes {
+  // the BMP fast path packs exactly four 16-bit code points per Long
+  require(n == 4, s"RepGramStats packs 4-code-point grams, got n = $n")
   override def inputTypes: Seq[DataType] = Seq[DataType](StringType)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override protected def nullSafeEval(v: Any): Any =

@@ -187,12 +187,6 @@ object StreamDedup {
       (transform: DataFrame => DataFrame): Option[DataFrame] = {
     import java.nio.file.Files
     require(batches.nonEmpty, "staged stream needs at least one batch")
-    val prof = sys.env.contains("GRAFT_STREAM_PROF")
-    var t0 = System.nanoTime()
-    def mark(phase: String): Unit = if (prof) {
-      val t1 = System.nanoTime()
-      println(f"STREAMPROF $phase: ${(t1 - t0) / 1e9}%.2f s"); t0 = t1
-    }
     // Staged layout memo, keyed by the CANONICALIZED logical plans of
     // the batch sequence. Plan equality is structural and includes
     // LocalRelation data, so equal keys mean byte-identical staged
@@ -220,13 +214,15 @@ object StreamDedup {
         .reduce(_ unionByName _)
         .repartition(batches.length, org.apache.spark.sql.functions.col("gbatch"))
         .write.partitionBy("gbatch").parquet(s"$tmp/in")
-      mark("stage-writes")
       val batchDirs = batches.indices
         .map(i => java.nio.file.Paths.get(f"$tmp/in/gbatch=b_$i%03d"))
         .filter(Files.isDirectory(_))
       // Batch ORDER is load-bearing (keeper = first arrival):
       // FileStreamSource orders files by mtime with path tiebreak, so
       // mtimes are pinned strictly increasing — batch i is micro-batch i+1.
+      // The same walk sums the staged parquet bytes the state width
+      // is sized to.
+      var stagedBytes = 0L
       locally {
         import java.nio.file.attribute.FileTime
         var t = 1000000L
@@ -234,7 +230,10 @@ object StreamDedup {
           val walk = Files.walk(dir)
           try {
             import scala.jdk.CollectionConverters._
-            walk.iterator().asScala.foreach(p => Files.setLastModifiedTime(p, FileTime.fromMillis(t)))
+            walk.iterator().asScala.foreach { p =>
+              Files.setLastModifiedTime(p, FileTime.fromMillis(t))
+              if (p.getFileName.toString.endsWith(".parquet")) stagedBytes += Files.size(p)
+            }
           } finally walk.close()
           t += 60000L
         }
@@ -250,19 +249,14 @@ object StreamDedup {
       val schema =
         if (batchDirs.isEmpty) batches.head.schema
         else spark.read.parquet(batchDirs.head.toString).schema
-      mark("mtime+schema")
-      Staged(tmp, schema, glob = if (batchDirs.isEmpty) "in" else "in/*")
+      Staged(tmp, schema, glob = if (batchDirs.isEmpty) "in" else "in/*", stagedBytes)
     })
     // fresh checkpoint per RUN (a reused checkpoint would resume the
     // previous query instead of replaying the staged batches)
     val ckpt = graft.sources.Scratch.tempDir("graft_ckpt_")
     try {
-      // cloned session (shared context, independent SQLConf): each
-      // state store pays checkpoint sync per micro-batch, so 8 stores
-      // beat 32 for a small-increment stateful op — same rationale as
-      // windowedRelay, without mutating the caller's conf
-      val ss = spark.newSession()
-      ss.conf.set("spark.sql.shuffle.partitions", StreamDedup.gateShufflePartitions)
+      // state width sized to the staged input (see stateSession)
+      val ss = stateSession(spark, staged.bytes)
       // No trailing no-data micro-batches in the GATE session: every
       // twin's final emission is driven by data (sentinel rows riding
       // the last batch, or per-arrival append) — measured r10: all 61
@@ -270,7 +264,7 @@ object StreamDedup {
       // empty batch was ~13% of the heavy twins' wall time. Gate
       // scaffolding only: a real deployment keeps the Spark default
       // (true) so watermark-closed windows emit without waiting for
-      // the next arrival. Env override for experiments.
+      // the next arrival.
       //
       // CONTRACT for twins staged through THIS path: the final
       // emission must be data-driven (a sentinel/barrier row IN the
@@ -282,19 +276,13 @@ object StreamDedup {
       // session (which keeps no-data batches) instead. The oracle gate
       // is the enforcement: a watermark-emission twin added through
       // runStagedStream fails its batch oracle on row count.
-      ss.conf.set("spark.sql.streaming.noDataMicroBatches.enabled",
-        StreamDedup.gateNoDataBatches)
+      ss.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
       val stream = ss.readStream.schema(staged.schema)
         .option("maxFilesPerTrigger", "1").parquet(s"${staged.dir}/${staged.glob}")
-      // sink-side single-partition exchange: the twins' per-batch
-      // emissions are dimension-sized, but the sink inherited the
-      // stateful width (8 partitions) and paid up to 8 parquet writer
-      // inits + an 8-entry manifest PER MICRO-BATCH — measured ~30% of
-      // addBatch on the cheap twins. The repartition sits ABOVE the
-      // stateful operators (their width/state layout is untouched) and
-      // moves only the emitted rows. Gate scaffolding: a real
-      // deployment sizes sink files to volume, not to the state width.
-      val transformed = transform(stream).repartition(1)
+      // the sink writes at the stateful width: one file per state
+      // partition per micro-batch, so small inputs write one file and
+      // large ones write volume-sized files in parallel
+      val transformed = transform(stream)
       // durable sink dir in RAM scratch, one per RUN: the sink's
       // _spark_metadata log lists exactly the committed files, so the
       // read-back is exactly-once even though q.stop() can race a
@@ -310,17 +298,7 @@ object StreamDedup {
         .writeStream.outputMode("append").format("parquet")
         .option("path", outDir.toString)
         .option("checkpointLocation", ckpt.toString).start()
-      try {
-        q.processAllAvailable(); mark("stream-run")
-        if (prof) {
-          import scala.jdk.CollectionConverters._
-          q.recentProgress.foreach { p =>
-            println(s"STREAMPROF batch ${p.batchId}: " +
-              s"${p.durationMs.asScala.toSeq.sortBy(_._1).map { case (k, v) => s"$k=$v" }.mkString(" ")}")
-          }
-        }
-      } finally q.stop()
-      mark("stream-stop")
+      try q.processAllAvailable() finally q.stop()
       // explicit schema: an all-pruned run commits zero data files and
       // schema inference over an empty sink would throw — the memory
       // sink returned a correctly-shaped empty frame, so this does too
@@ -333,22 +311,33 @@ object StreamDedup {
     }
   }
 
-  /** Shuffle width for the gate-cloned streaming sessions. Each
-    * stateful operator materializes one state store PER shuffle
-    * partition PER micro-batch commit, and the staged twins' state is
-    * dimension-sized (per-user / per-window-key at test SF), so the
-    * width buys only per-batch commit overhead — not throughput. Env
-    * knob for measurement; a real deployment sizes this to state
-    * volume, not the gate. */
-  private[streaming] val gateShufflePartitions: String =
-    sys.env.getOrElse("GRAFT_STREAM_SHUFFLE", "8")
+  /** State width of a staged stream: `ceil(inputBytes / advisoryBytes)`
+    * clamped to [1, cap]. Each stateful operator commits one state
+    * store PER shuffle partition PER micro-batch, so the width is
+    * sized to the input the way AQE would coalesce a batch shuffle
+    * (Spark switches AQE off for streaming queries): a few-MB input
+    * gets one store, and the caller's shuffle width is the ceiling. */
+  private[graft] def stateWidth(inputBytes: Long, advisoryBytes: Long, cap: Int): Int = {
+    val w = inputBytes / advisoryBytes + (if (inputBytes % advisoryBytes == 0) 0 else 1)
+    math.max(1L, math.min(cap.toLong, w)).toInt
+  }
 
-  /** See the comment at the cloned-session setup in runStagedStream. */
-  private[streaming] val gateNoDataBatches: String =
-    sys.env.getOrElse("GRAFT_STREAM_NODATA", "false")
+  /** Cloned session (shared context, independent SQLConf) whose
+    * shuffle width is [[stateWidth]] of `inputBytes` against the
+    * caller's advisory partition size and shuffle width, without
+    * mutating the caller's conf. */
+  private[streaming] def stateSession(spark: SparkSession, inputBytes: Long): SparkSession = {
+    val conf = spark.sessionState.conf
+    val width = stateWidth(inputBytes,
+      conf.getConf(org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES),
+      conf.numShufflePartitions)
+    val ss = spark.newSession()
+    ss.conf.set("spark.sql.shuffle.partitions", width.toString)
+    ss
+  }
 
   private case class Staged(dir: java.nio.file.Path,
-      schema: org.apache.spark.sql.types.StructType, glob: String)
+      schema: org.apache.spark.sql.types.StructType, glob: String, bytes: Long)
   private val stagedCache =
     new java.util.concurrent.ConcurrentHashMap[Seq[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan], Staged]()
 

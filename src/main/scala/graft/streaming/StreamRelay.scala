@@ -81,17 +81,13 @@ object StreamRelay {
     val q =
       try {
         Files.createDirectories(inDir)
-        Files.copy(Paths.get(s"$dir/events.parquet"), inDir.resolve("batch0.parquet"),
+        val staged = inDir.resolve("batch0.parquet")
+        Files.copy(Paths.get(s"$dir/events.parquet"), staged,
           StandardCopyOption.REPLACE_EXISTING)
-        // run the streaming query in a cloned session (shared
-        // SparkContext, independent SQLConf): the stateful aggregation
-        // gets shuffle partitions sized to its state, not the batch
-        // engine's width — each state store carries checkpoint sync cost
-        // per micro-batch, so 8 stores beat 32 for a per-window-key
-        // aggregate, without mutating the caller's session conf
-        val ss = spark.newSession()
-        ss.conf.set("spark.sql.shuffle.partitions",
-          StreamDedup.gateShufflePartitions)
+        // run the streaming query in a cloned session whose state
+        // width is sized to the copied events file, the staged twins'
+        // rule (StreamDedup.stateWidth), not the batch engine's width
+        val ss = StreamDedup.stateSession(spark, Files.size(staged))
         // no-data micro-batches stay ON here (unlike runStagedStream's
         // sentinel-flushed twins): the barrier row advances the
         // watermark in batch N, but the windows that watermark closes

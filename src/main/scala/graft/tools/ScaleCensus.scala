@@ -14,6 +14,9 @@ import java.util.concurrent.{Executors, TimeUnit, TimeoutException}
   * O(N·Q)/O(N²) exact baselines).
   */
 object ScaleCensus {
+  /** Row count reported for a noop-sink run, which counts no rows. */
+  private val NoRows = -1L
+
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val timeoutSec = args(1).toLong
@@ -50,17 +53,21 @@ object ScaleCensus {
           // noop sink like the bench (guide §1.4): count() prunes
           // columns/subtrees, so a census could under-exercise exactly
           // the expensive column a key would compute in production.
-          // GRAFT_BENCH_ACTION=count restores the old action.
+          // GRAFT_BENCH_ACTION=count restores the old action. The noop
+          // save is the one execution the census times and budgets, so
+          // it returns NoRows instead of running the plan a second time
+          // for a row count.
           try {
             val df = graft.SparkEntry.queries(name)(spark, dir)
             if (sys.env.getOrElse("GRAFT_BENCH_ACTION", "noop") == "count") df.count()
-            else { df.write.format("noop").mode("overwrite").save(); df.count() }
+            else { df.write.format("noop").mode("overwrite").save(); NoRows }
           } finally spark.sparkContext.clearJobGroup()
         }
       })
       try {
         val rows = fut.get(timeoutSec, TimeUnit.SECONDS)
-        println(f"[census] $name ${(System.nanoTime() - t0) / 1e9}%.2f s rows=$rows")
+        val shown = if (rows == NoRows) "n/a" else rows.toString
+        println(f"[census] $name ${(System.nanoTime() - t0) / 1e9}%.2f s rows=$shown")
       } catch {
         case _: TimeoutException =>
           bad += 1

@@ -195,4 +195,10 @@ class NativeParitySpec extends SparkSpec {
       assert(bad.isEmpty)
     }
   }
+
+  test("RepGramStats rejects a gram length other than 4 when built") {
+    val e = intercept[IllegalArgumentException](
+      graft.plans.TextExprs.repGramStatsCol(lower($"text"), 3))
+    assert(e.getMessage.contains("n = 3"))
+  }
 }
