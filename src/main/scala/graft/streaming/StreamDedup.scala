@@ -280,8 +280,7 @@ object StreamDedup {
       val stream = ss.readStream.schema(staged.schema)
         .option("maxFilesPerTrigger", "1").parquet(s"${staged.dir}/${staged.glob}")
       // the sink writes at the stateful width: one file per state
-      // partition per micro-batch, so small inputs write one file and
-      // large ones write volume-sized files in parallel
+      // partition per micro-batch (one file at test scale)
       val transformed = transform(stream)
       // durable sink dir in RAM scratch, one per RUN: the sink's
       // _spark_metadata log lists exactly the committed files, so the

@@ -10,8 +10,8 @@ import graft.streaming.StreamDedup
   * to their staged input: ceil(input bytes / the caller's advisory
   * partition size), clamped to [1, the caller's shuffle width]. The
   * width is a size-gated choice, so results must not depend on it:
-  * every twin runs at the derived width (1 at test scale) and again
-  * with a few-KB advisory size that drives the width above 1. */
+  * every streaming twin runs at the derived width (1 at test scale)
+  * and again with a few-KB advisory size that drives the width above 1. */
 class StreamWidthSpec extends SparkSpec {
 
   private val advisoryKey = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
@@ -40,9 +40,9 @@ class StreamWidthSpec extends SparkSpec {
     }
   }
 
-  private val keys = Seq("stream_frame_stats", "stream_chunks", "stream_power",
-    "stream_downsample", "stream_ttl", "dedup_exact_stream", "dedup_stream",
-    "stream_relay")
+  /** Every streaming twin in the inventory. */
+  private val keys = SparkEntry.queries.keys.toSeq.sorted
+    .filter(k => k.startsWith("stream_") || k.endsWith("_stream"))
 
   /** Every key's rows, order-blind, plus the state widths its runs used. */
   private def runAll(): (Map[String, Seq[String]], Set[Long]) = {
@@ -72,9 +72,9 @@ class StreamWidthSpec extends SparkSpec {
       finally spark.conf.unset(advisoryKey)
     assert(wideWidths.exists(_ > 1L), s"widths $wideWidths")
     assert(wideWidths.forall(_ <= spark.sessionState.conf.numShufflePartitions))
-    keys.foreach { k =>
-      assert(derived(k).nonEmpty, s"$k returned no rows")
-      assert(derived(k) == wide(k), s"$k differs between state widths")
-    }
+    val empty = keys.filter(derived(_).isEmpty)
+    assert(empty.isEmpty, s"returned no rows: $empty")
+    val differ = keys.filter(k => derived(k) != wide(k))
+    assert(differ.isEmpty, s"differ between state widths: $differ")
   }
 }
